@@ -1,21 +1,53 @@
 package graft.engine
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** The reference engine's user-facing API, verbatim semantics: a user of
   * tnaimisha/MapreduceMovieAnalysis-Cloud runs two pipelines (README.md:12-13)
   * over MovieLens-format movies/ratings tables. This facade is the drop-in:
   * load with [[Sources.moviesCsv]]/[[Sources.ratingsCsv]], call one of these,
   * write the result anywhere `DataFrameWriter` reaches (the reference's
-  * tab-text sink ≙ `.write.option("sep", "\t").csv(out)`).
+  * tab-text sink ≙ `.write.option("sep", "\t").csv(out)`). It is the only
+  * implementation of both pipelines: the registered queries run it on the
+  * MovieLens fixture and on the driver's star schema (part as movies,
+  * lineitem as ratings).
+  *
+  * Inputs: `movies(movieId, title)` and `ratings(movieId, rating)`; other
+  * columns are ignored. Precondition: `movieId` is unique in `movies`, as the
+  * reference's title HashMap assumes (MovieRank.java:30-51). Under it,
+  * aggregating ratings per movieId before the join gives the same rows as
+  * joining first and grouping by (movieId, title).
+  *
+  * Reference shape (per pipeline): two chained MapReduce jobs with a durable
+  * intermediate (MovieRank.java:169,194) — here a single DataFrame whose
+  * physical plan is:
+  *   Scan(ratings) → partial HashAggregate → Exchange(hash) →
+  *   final HashAggregate → Filter(HAVING) → BroadcastHashJoin(movies) →
+  *   Exchange(range) → Sort
+  * i.e. exactly two in-flight shuffles and zero durable intermediates; the
+  * DistributedCache replicated-HashMap join (MovieRank.java:30-51,67) becomes
+  * `broadcast(movies)` → BroadcastExchangeExec.
+  *
+  * Scale notes (100 TB design):
+  *   - movieId is low-cardinality relative to the ratings, so partial
+  *     (map-side) aggregation collapses the shuffle to at most |movies| rows
+  *     per task, the same win the reference's (disabled) combiner chased
+  *     (MovieRank.java:80-95,161); titles never ride that shuffle;
+  *   - the dimension is broadcast explicitly — at any realistic movie
+  *     dimension size (≪ executor memory) this removes the shuffle a
+  *     sort-merge join would need, and the join probes aggregated rows, not
+  *     ratings;
+  *   - the final global sort range-partitions only the aggregated rows
+  *     (|movies|-sized), never the ratings.
   *
   * Semantic deltas vs the reference, all documented in SURVEY.md §7.5:
   * comma-titles are parsed per RFC-4180 (quotes stripped; reference keeps
   * them, MovieRank.java:44-47); join misses are dropped (inner join; the
   * reference emits literal "null" titles, MovieRank.java:67-70 — faithful
-  * variant at [[RefQueries.joinWithNullTitle]]); sort is globally ordered
-  * (the reference's multi-reducer output was only per-partition sorted,
-  * MovieRank.java:200-203).
+  * variant at [[joinWithNullTitle]]); sort is globally ordered with a unique
+  * movieId tie-break (the reference's multi-reducer output was only
+  * per-partition sorted, MovieRank.java:200-203).
   */
 object MovieAnalysis {
 
@@ -23,21 +55,41 @@ object MovieAnalysis {
     * Output (movieId, title, cnt) ordered by (cnt, movieId).
     * @param asc true = literal reference order (Hadoop ascending IntWritable
     *            shuffle sort); false = README.md:12 "popularity" intent. */
-  def movieRank(movies: DataFrame, ratings: DataFrame, asc: Boolean = true): DataFrame =
-    RefQueries.rankByCount(ratings, movies,
-      factKey = "movieId", dimKey = "movieId", titleCol = "title", asc = asc)
-      .withColumnRenamed("key", "movieId")
+  def movieRank(movies: DataFrame, ratings: DataFrame, asc: Boolean = true): DataFrame = {
+    val cntOrder = if (asc) col("cnt").asc else col("cnt").desc
+    ratings.groupBy(col("movieId")).agg(count(lit(1)).as("cnt"))
+      .join(broadcast(movies), Seq("movieId"))
+      .select(col("movieId"), col("title"), col("cnt"))
+      .orderBy(cntOrder, col("movieId").asc)
+  }
 
   /** MovieRating (MovieRating.java:140-210): movies by average rating, only
     * those with > minCount ratings and average > minAvg (strict, per
     * MovieRating.java:97,100; README.md:13 "fewer than 10 ... ignored").
     * Output (movieId, title, avg_rating, num_ratings) ordered by
-    * (avg_rating, movieId). */
+    * (avg_rating, movieId), ascending as the reference's shuffle sorts.
+    *
+    * avg is rounded to 4 decimals *in the output only* (HAVING compares the
+    * raw double) — double-sum associativity differences vs the DuckDB oracle
+    * are ~1e-12, far below both the output rounding and any realistic
+    * threshold gap (SURVEY.md §7.5). */
   def movieRating(movies: DataFrame, ratings: DataFrame,
-                  minCount: Long = 10L, minAvg: Double = 4.0,
-                  asc: Boolean = true): DataFrame =
-    RefQueries.ratingByAvg(ratings, movies,
-      factKey = "movieId", dimKey = "movieId", titleCol = "title",
-      measure = "rating", minCount = minCount, minAvg = minAvg, asc = asc)
-      .withColumnRenamed("key", "movieId")
+                  minCount: Long = 10L, minAvg: Double = 4.0): DataFrame =
+    ratings.groupBy(col("movieId"))
+      .agg(count(lit(1)).as("num_ratings"), avg(col("rating")).as("avg_raw"))
+      .where(col("num_ratings") > minCount && col("avg_raw") > minAvg)
+      .join(broadcast(movies), Seq("movieId"))
+      .select(col("movieId"), col("title"),
+        round(col("avg_raw"), 4).as("avg_rating"), col("num_ratings"))
+      .orderBy(col("avg_rating"), col("movieId"))
+
+  /** J1a join-miss policy (SURVEY.md §2.3): the reference's missing-movie
+    * probe emits the literal string "null" as the title (HashMap.get → null,
+    * unchecked concat, MovieRank.java:67-70). Faithful variant: every rating
+    * row, left-outer joined to movies, with a missing title coalesced to the
+    * literal. The reference form the quirk-pinning tests compare against;
+    * the pipelines use clean inner-join semantics. */
+  def joinWithNullTitle(movies: DataFrame, ratings: DataFrame): DataFrame =
+    ratings.join(broadcast(movies), ratings("movieId") === movies("movieId"), "left_outer")
+      .withColumn("title", coalesce(movies("title"), lit("null")))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.sql.expressions.Window
-import graft.engine.{RefQueries, Sources, Tuning}
+import graft.engine.{MovieAnalysis, Sources, Tuning}
 
 /** Reference-parity query registry: the two headline pipelines plus one
   * micro-query per operator row of SURVEY.md §2, each with DuckDB oracle SQL.
@@ -23,66 +23,52 @@ object RefParityQueries {
     * visible to the DuckDB oracle. */
   val FixtureDir = "/root/repo/fixtures"
 
+  private def fixtureMovies(s: SparkSession) = Sources.moviesCsv(s, s"$FixtureDir/movies.csv")
+  private def fixtureRatings(s: SparkSession) = Sources.ratingsCsv(s, s"$FixtureDir/ratings.csv")
+
+  /** Runs a pipeline on the driver's star schema read as MovieLens: part is
+    * the movie dimension (p_name as title), lineitem the ratings fact
+    * (l_quantity as rating); the movie id comes back as `key`. */
+  private def onParts(pipeline: (DataFrame, DataFrame) => DataFrame) = q((s, dir) =>
+    pipeline(
+      Sources.part(s, dir).select(col("p_partkey").as("movieId"), col("p_name").as("title")),
+      Sources.lineitem(s, dir).select(col("l_partkey").as("movieId"), col("l_quantity").as("rating")))
+      .withColumnRenamed("movieId", "key"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ── Headline pipelines (SURVEY.md §2.10) ──────────────────────────────
-    // Q1 MovieRank ≙ rank parts by lineitem count (MovieRank.java:145-214):
-    // broadcast join + groupBy count + global asc sort (O1 literal order).
-    "q1_movierank" -> q((s, dir) =>
-      RefQueries.rankByCount(
-        Sources.lineitem(s, dir), Sources.part(s, dir),
-        factKey = "l_partkey", dimKey = "p_partkey", titleCol = "p_name",
-        asc = true)),
+    // All five run MovieAnalysis; see its Scaladoc for the plan shape.
+    // Q1 MovieRank ≙ rank parts by lineitem count (MovieRank.java:145-214),
+    // global asc sort (O1 literal order).
+    "q1_movierank" -> onParts(MovieAnalysis.movieRank(_, _)),
 
     // Q2 MovieRating ≙ avg(l_quantity) per part, strict dual HAVING
     // (MovieRating.java:97,100), asc sort (O2 literal order).
-    "q2_movierating" -> q((s, dir) =>
-      RefQueries.ratingByAvg(
-        Sources.lineitem(s, dir), Sources.part(s, dir),
-        factKey = "l_partkey", dimKey = "p_partkey", titleCol = "p_name",
-        measure = "l_quantity", minCount = 25L, minAvg = 25.5, asc = true)),
+    "q2_movierating" -> onParts(MovieAnalysis.movieRating(_, _, minCount = 25L, minAvg = 25.5)),
 
     // README.md:12 intent: "popularity" = descending count (SURVEY §2.5 O1a).
-    "q1_movierank_desc" -> q((s, dir) =>
-      RefQueries.rankByCount(
-        Sources.lineitem(s, dir), Sources.part(s, dir),
-        factKey = "l_partkey", dimKey = "p_partkey", titleCol = "p_name",
-        asc = false)),
+    "q1_movierank_desc" -> onParts(MovieAnalysis.movieRank(_, _, asc = false)),
 
     // The literal MovieLens CSV ingest path end-to-end (S1 csv scan, P2
-    // header skip, P3 comma/quote-in-title parse per RFC-4180, then the
-    // MovieRank join+count+sort): reads the committed deterministic fixture
+    // header skip, P3 comma/quote-in-title parse per RFC-4180, then
+    // MovieRank): reads the committed deterministic fixture
     // (fixtures/movies.csv has quoted comma-titles and doubled-quote
     // escapes — the rows the reference re-joins by hand, MovieRank.java:
-    // 40-47). Aggregate-before-join: the fact side shuffles only
-    // (movieId, count) pairs, then the dim join broadcasts — the 100 TB
-    // shape. Ratings of unknown movieIds drop via the inner join (the
+    // 40-47). Ratings of unknown movieIds drop via the inner join (the
     // clean variant of J1a; the faithful "null"-title form is
     // join_miss_null).
-    "q1_movielens_csv" -> q((s, _) => {
-      val movies = Sources.moviesCsv(s, s"$FixtureDir/movies.csv")
-      val ratings = Sources.ratingsCsv(s, s"$FixtureDir/ratings.csv")
-      ratings.groupBy(col("movieId")).agg(count(lit(1)).as("n_ratings"))
-        .join(broadcast(movies), Seq("movieId"))
-        .select(col("movieId"), col("title"), col("n_ratings"))
-        .orderBy(col("n_ratings"), col("movieId"))
-    }),
+    "q1_movielens_csv" -> q((s, _) =>
+      MovieAnalysis.movieRank(fixtureMovies(s), fixtureRatings(s))
+        .withColumnRenamed("cnt", "n_ratings")),
 
-    // The MovieRating pipeline on the same CSV fixture: avg rating per
-    // movie with the reference's dual strict HAVING (count > 10 AND
-    // avg > 3.5 — MovieRating.java:97,100), ascending rating sort. Completes
-    // the literal-format pair with q1_movielens_csv.
-    "q2_movielens_csv" -> q((s, _) => {
-      val movies = Sources.moviesCsv(s, s"$FixtureDir/movies.csv")
-      val ratings = Sources.ratingsCsv(s, s"$FixtureDir/ratings.csv")
-      ratings.groupBy(col("movieId"))
-        .agg(count(lit(1)).as("n_ratings"),
-          round(avg(col("rating")), 4).as("avg_rating"))
-        .where(col("n_ratings") > 10 && col("avg_rating") > 3.5)
-        .join(broadcast(movies), Seq("movieId"))
-        .select(col("movieId"), col("title"), col("n_ratings"), col("avg_rating"))
-        .orderBy(col("avg_rating"), col("movieId"))
-    }),
+    // MovieRating on the same CSV fixture with the reference's dual strict
+    // HAVING (count > 10 AND avg > 3.5 — MovieRating.java:97,100).
+    // Completes the literal-format pair with q1_movielens_csv.
+    "q2_movielens_csv" -> q((s, _) =>
+      MovieAnalysis.movieRating(fixtureMovies(s), fixtureRatings(s), minAvg = 3.5)
+        .select(col("movieId"), col("title"), col("num_ratings").as("n_ratings"),
+          col("avg_rating"))),
 
     // S4 tab-text sink driven end-to-end under the oracle: write a
     // projection as `\t`-separated text (the reference's TextOutputFormat,
@@ -441,7 +427,7 @@ object RefParityQueries {
         |             columns={'userId':'INTEGER','movieId':'INTEGER',
         |                      'rating':'DOUBLE','timestamp':'BIGINT'})
         |      GROUP BY movieId
-        |      HAVING count(*) > 10 AND round(avg(rating), 4) > 3.5) r
+        |      HAVING count(*) > 10 AND avg(rating) > 3.5) r
         |JOIN read_csv('$FixtureDir/movies.csv', header=true,
         |       columns={'movieId':'INTEGER','title':'VARCHAR','genres':'VARCHAR'}) m
         |  USING (movieId)

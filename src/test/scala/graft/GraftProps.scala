@@ -3,7 +3,7 @@ package graft
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.forAll
 import org.apache.spark.sql.functions._
-import graft.engine.RefQueries
+import graft.engine.MovieAnalysis
 import graft.functions.{NGramShingles, SimHash64, VecKernel}
 import graft.operators.Dedup
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -19,17 +19,54 @@ object GraftProps extends Properties("graft") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10)
 
+  // Fact keys 1..10 against a movie dimension of 1..8: ratings of movies 9
+  // and 10 must drop through the inner join.
   private val ratingGen: Gen[List[(Int, Double)]] =
-    Gen.listOfN(60, Gen.zip(Gen.choose(1, 8), Gen.choose(0.0, 5.0)))
+    Gen.listOfN(60, Gen.zip(Gen.choose(1, 10), Gen.choose(0.0, 5.0)))
 
-  property("rankByCount ≡ in-memory groupBy-count reference") = forAll(ratingGen) { rows =>
+  private def movies = {
     import spark.implicits._
-    val fact = rows.toDF("movieId", "rating")
-    val dim = (1 to 8).map(i => (i, s"title$i")).toDF("dimId", "title")
-    val got = RefQueries.rankByCount(fact, dim, "movieId", "dimId", "title")
-      .collect().map(r => (r.getInt(0), r.getLong(2))).toMap
-    val expected = rows.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+    (1 to 8).map(i => (i, s"title$i")).toDF("movieId", "title")
+  }
+
+  property("movieRank ≡ in-memory groupBy-count reference") = forAll(ratingGen) { rows =>
+    import spark.implicits._
+    val got = MovieAnalysis.movieRank(movies, rows.toDF("movieId", "rating"))
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
+    val expected = rows.filter(_._1 <= 8).groupBy(_._1).toSeq
+      .map { case (id, rs) => (id, s"title$id", rs.size.toLong) }
+      .sortBy { case (id, _, n) => (n, id) }
     got == expected
+  }
+
+  // 0.5-step ratings (MovieLens's scale) over few movies, so a count equal
+  // to minCount and a mean exactly equal to minAvg both occur; sums of
+  // half-steps are exact, so the reference's mean is bit-equal to Spark's.
+  private val halfStepGen: Gen[(List[(Int, Double)], Long, Double)] = for {
+    n <- Gen.choose(0, 80)
+    rows <- Gen.listOfN(n, Gen.zip(Gen.choose(1, 10), Gen.choose(1, 10).map(_ * 0.5)))
+    minCount <- Gen.choose(0L, 8L)
+    minAvg <- Gen.choose(2, 8).map(_ * 0.5)
+  } yield (rows, minCount, minAvg)
+
+  property("movieRating ≡ in-memory strict-HAVING avg reference") = forAll(halfStepGen) {
+    case (rows, minCount, minAvg) =>
+      import spark.implicits._
+      val got = MovieAnalysis.movieRating(movies, rows.toDF("movieId", "rating"),
+          minCount = minCount, minAvg = minAvg)
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getDouble(2), r.getLong(3))).toSeq
+      val expected = rows.filter(_._1 <= 8).groupBy(_._1).toSeq
+        .flatMap { case (id, rs) =>
+          val n = rs.size.toLong
+          val mean = rs.map(_._2).sum / n
+          // strict > on count and on the raw (unrounded) mean
+          if (n > minCount && mean > minAvg)
+            Some((id, s"title$id",
+              BigDecimal(mean).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble, n))
+          else None
+        }
+        .sortBy { case (id, _, avg, _) => (avg, id) }
+      got == expected
   }
 
   property("aggregation invariant under repartition(7)") = forAll(ratingGen) { rows =>

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.engine.{MovieAnalysis, RefQueries, Sources}
+import graft.engine.{MovieAnalysis, Sources}
 
 /** Golden tests for the literal MovieLens pipelines (SURVEY.md §5.4), pinning
   * every reference quirk decision: comma-title parsing (P3), strict HAVING
@@ -46,8 +46,7 @@ class MovieAnalysisSpec extends AnyFunSuite {
   }
 
   test("J1a faithful variant: join misses emit literal 'null' title") {
-    val j = RefQueries.joinWithNullTitle(ratings, movies,
-      factKey = "movieId", dimKey = "movieId", titleCol = "title")
+    val j = MovieAnalysis.joinWithNullTitle(movies, ratings)
     assert(j.where(col("title") === "null").count() == 2L) // movie 99's 2 rows
     assert(j.count() == 62L)                                // nothing dropped
   }

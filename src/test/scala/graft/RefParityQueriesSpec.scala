@@ -2,6 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import graft.queries.RefParityQueries
 
 /** Smoke + spot checks for every registered reference-parity query on the
@@ -29,23 +33,32 @@ class RefParityQueriesSpec extends AnyFunSuite {
     assert(total == 6000L)
   }
 
-  test("q1_movierank plan: broadcast join + two-phase aggregate, no extra shuffle") {
-    val df = RefParityQueries.queries("q1_movierank")(spark, dir)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join in:\n$plan")
-    assert(!plan.contains("SortMergeJoin"), "dimension join must not shuffle the fact side")
+  /** Every node of a physical plan, pre-order, through AQE stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case qs: QueryStageExec => nodes(qs.plan)
+    case other => other +: other.children.flatMap(nodes)
   }
 
-  test("q1_movielens_csv plan: aggregate below the join, dimension broadcast") {
-    val df = RefParityQueries.queries("q1_movielens_csv")(spark, dir)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"movies dim must broadcast:\n$plan")
-    // partial+final count on the ratings side BEFORE the join: the fact
-    // stream shuffles (movieId, count) pairs, never full rows post-join
-    val joinIdx = plan.indexOf("BroadcastHashJoin")
-    val aggIdx = plan.indexOf("HashAggregate")
-    assert(aggIdx > joinIdx, s"aggregate must sit below the join in:\n$plan")
+  // Every registered pipeline query runs MovieAnalysis's one plan shape.
+  Seq("q1_movierank", "q2_movierating", "q1_movierank_desc",
+      "q1_movielens_csv", "q2_movielens_csv").foreach { name =>
+    test(s"$name plan: aggregate below the join, dimension broadcast") {
+      val df = RefParityQueries.queries(name)(spark, dir)
+      df.collect() // AQE finalizes the plan at execution
+      val plan = df.queryExecution.executedPlan
+      val all = nodes(plan)
+      val joins = all.collect { case j: BroadcastHashJoinExec => j }
+      assert(joins.size == 1, s"movies dim must broadcast:\n$plan")
+      assert(!all.exists(_.isInstanceOf[SortMergeJoinExec]),
+        s"dimension join must not shuffle the fact side:\n$plan")
+      // partial + final aggregate, both BELOW the join: the fact stream
+      // shuffles (movieId, aggregate) pairs, never full rows post-join
+      val aggs = all.count(_.isInstanceOf[HashAggregateExec])
+      val below = nodes(joins.head).count(_.isInstanceOf[HashAggregateExec])
+      assert(aggs >= 2 && below == aggs,
+        s"two-phase aggregate must sit below the join ($below of $aggs) in:\n$plan")
+    }
   }
 
   test("scan_project_filter plan: filter and projection pushed to parquet scan") {
@@ -58,8 +71,7 @@ class RefParityQueriesSpec extends AnyFunSuite {
   }
 
   test("join_aqe_skew: AQE splits the hot fact partition at runtime (skew=true)") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
     import org.apache.spark.sql.execution.PartialReducerPartitionSpec
     val df = RefParityQueries.queries("join_aqe_skew")(spark, dir)
     df.collect() // AQE decides skew handling at execution time
@@ -71,13 +83,8 @@ class RefParityQueriesSpec extends AnyFunSuite {
     // must split into several PartialReducerPartitionSpec reads, and the
     // total split count must stay O(one partition's splits) — a handful of
     // real tasks, not the hundreds the old 1KB advisory manufactured.
-    def reads(p: SparkPlan): Seq[AQEShuffleReadExec] = p match {
-      case a: AdaptiveSparkPlanExec => reads(a.executedPlan)
-      case qs: QueryStageExec => reads(qs.plan)
-      case r: AQEShuffleReadExec => r +: r.children.flatMap(reads)
-      case other => other.children.flatMap(reads)
-    }
-    val partials = reads(df.queryExecution.executedPlan)
+    val partials = nodes(df.queryExecution.executedPlan)
+      .collect { case r: AQEShuffleReadExec => r }
       .flatMap(_.partitionSpecs)
       .collect { case p: PartialReducerPartitionSpec => p }
     assert(partials.size >= 2,
@@ -95,19 +102,12 @@ class RefParityQueriesSpec extends AnyFunSuite {
 
   test("join_runtime_bloom: injected bloom prunes the fact side before the shuffle") {
     import org.apache.spark.sql.execution.FilterExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.SparkPlan
     val df = RefParityQueries.queries("join_runtime_bloom")(spark, dir)
     df.collect() // execute so AQE finalizes and metrics populate
     // the fact-side scan must carry a bloom_filter_might_contain filter
     // built from the URGENT orders' keys (InjectRuntimeFilter fired)
-    def filters(p: SparkPlan): Seq[FilterExec] = p match {
-      case a: AdaptiveSparkPlanExec => filters(a.executedPlan)
-      case qs: QueryStageExec => filters(qs.plan)
-      case f: FilterExec => f +: f.children.flatMap(filters)
-      case other => other.children.flatMap(filters)
-    }
-    val bloomFilters = filters(df.queryExecution.executedPlan)
+    val bloomFilters = nodes(df.queryExecution.executedPlan)
+      .collect { case f: FilterExec => f }
       .filter(_.condition.toString.contains("might_contain"))
     assert(bloomFilters.nonEmpty, "no runtime bloom filter in the plan:\n" +
       df.queryExecution.executedPlan)
