@@ -25,18 +25,6 @@ object SparkEntry {
       FunctionQueries.queries ++ CurationQueries.queries ++
       LexicalQueries.queries
 
-  /** Queries ADDED THIS ROUND — [[Verify]] schedules these before the
-    * carried surface so a wall-budget-degraded run still lands the round's
-    * additions (the round-16 lesson: the driver's correctness window can be
-    * tighter than the full 220+-query sweep on a slow-weather boot).
-    * Updated each round alongside the registrations. */
-  def newThisRound: Set[String] = Set(
-    "sketch_kmv_intersect_scale", "sketch_kmv_diff_scale",
-    "corpus_snapshot_eqdelete_read", "corpus_snapshot_compacted_read",
-    "corpus_snapshot_evolved_read", "corpus_snapshot_incremental_read",
-    "corpus_snapshot_changelog", "corpus_snapshot_changelog_eq",
-    "corpus_snapshot_tail_read", "dedup_weighted_jaccard_pairs", "corpus_snapshot_history", "text_scrub_scale", "text_ref_lm_surprisal", "dedup_winnow_spans", "events_interval_lookup", "sample_rendezvous_shards", "corpus_snapshot_stats_rollforward", "events_attribution")
-
   /** Queries whose REGISTERED form exists for DuckDB-oracle parity or as a
     * demoted verification twin — NOT the at-scale path. Machine-readable so
     * a scale run can exclude them DELIBERATELY instead of discovering their

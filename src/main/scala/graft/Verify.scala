@@ -19,17 +19,14 @@ import java.util.concurrent.atomic.AtomicBoolean
   *     final summary with `aborted:true` when a signal lands mid-run;
   *   - a WALL BUDGET (SPARK_GRAFT_VERIFY_BUDGET_S, default 1500 s) stops
   *     LAUNCHING queries once exceeded — already-running ones finish, the
-  *     rest are disclosed as `skipped` — and the run order puts
-  *     [[SparkEntry.newThisRound]] first so a degraded run still covers the
-  *     round's additions before the carried surface;
-  *   - queries run CONCURRENTLY (SPARK_GRAFT_VERIFY_THREADS, default 4)
-  *     but grouped by name family (prefix before the first '_'): the
-  *     shared memoized artifacts (stored ANN indexes, snapshot tables —
-  *     TrieMap.getOrElseUpdate may evaluate its builder twice under a
-  *     race, and two builders writing one index dir corrupt it) are only
-  *     ever shared within a family, so family-serial scheduling makes the
-  *     parallel run artifact-safe by construction. Families are queued
-  *     longest-first (LPT) with new-query families promoted to the head.
+  *     rest are disclosed as `skipped`;
+  *   - queries run CONCURRENTLY (SPARK_GRAFT_VERIFY_THREADS, default 4),
+  *     grouped by name family (prefix before the first '_') and families
+  *     queued longest-first (LPT). Shared artifacts (stored ANN indexes,
+  *     snapshot tables, trained quantizers) are built once-only through
+  *     [[graft.queries.Artifacts]] whatever the schedule; the grouping
+  *     keeps a family's queries, which share those artifacts, on one
+  *     worker so the first builds and the rest reuse.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -145,18 +142,13 @@ object Verify {
       writeStatus()
     }
 
-    // 2. Family-grouped schedule: new-query families first, then LPT by
-    // family size; inside a family new queries first, then name order.
+    // 2. Family-grouped schedule: LPT by family size, name order inside a
+    // family.
     val qs = SparkEntry.queries
     def family(n: String): String = n.takeWhile(_ != '_')
-    val groups = names.groupBy(family).toSeq
-      .map { case (f, ns) =>
-        val (fresh, carried) = ns.partition(SparkEntry.newThisRound)
-        (f, fresh ++ carried, fresh.nonEmpty)
-      }
-      .sortBy { case (_, ns, hasNew) => (!hasNew, -ns.size) }
+    val groups = names.groupBy(family).toSeq.sortBy { case (_, ns) => -ns.size }
     val queue = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
-    groups.foreach { case (f, ns, _) => queue.add((f, ns)) }
+    groups.foreach(queue.add)
     val workers = (0 until math.max(1, nThreads)).map { _ =>
       val th = new Thread(() => {
         var g = queue.poll()

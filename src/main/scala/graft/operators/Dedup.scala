@@ -73,6 +73,54 @@ object Dedup {
     docs.select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
       .withColumn("n_sh", size(col("sh")))
 
+  /** Hashed candidate classes of the set prefix-filter joins
+    * ([[exactJaccardJoin]], [[containmentJoin]]) over a (id, sh, n_sh)
+    * shingle projection: `tok` = one (id, n_sh, h) row per shingle, and
+    * `sortedSh` = each doc's classes rarest-first as (id, n_sh, sh_sorted).
+    *
+    * Global shingle rarity is the document frequency per class. The prefix
+    * order only needs to be a TOTAL ORDER consistent across docs, so the
+    * (df, h) tuple itself is the sort key — no global row_number window (a
+    * single-partition sort at scale); array_sort on the collected structs
+    * orders lexicographically by (df, h) per doc, fully distributed.
+    *
+    * Candidate generation runs on h = xxhash64(s) — 8-byte longs where the
+    * string shingle used to cross every exchange and drive every
+    * sort/join/aggregate comparison (guide §2.3, narrower types; the
+    * weightedJaccardJoin change, applied to the set form). Recall stays
+    * exactly 1.0: the PPJoin pigeonhole (two-sided for jaccard, one-sided
+    * for containment) needs only SOME fixed total order; a collision merges
+    * two shingles into one class, which only ADDS common keys between docs
+    * while SHORTENING a doc's class list against its true-|sh|-derived
+    * prefix length — the smallest common key still lands inside both
+    * prefixes. Verification recomputes from the true string arrays, so the
+    * output is unchanged.
+    *
+    * The class-frequency join is pinned to SHUFFLE_HASH, like every join of
+    * both operators: the joined sides (class frequency table, prefix
+    * inverted index, full shingle-set projections) are all CORPUS-SIZED, so
+    * broadcasting them is wrong at scale — and locally the size estimator
+    * undercounts the array-of-string rows badly enough to broadcast
+    * hundreds of MB, fragmenting the heap (measured 7 s → 187 s run-to-run
+    * degradation from humongous-allocation churn). */
+  private def rarestFirstClasses(ds: DataFrame): (DataFrame, DataFrame) = {
+    val tok = ds.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
+      .select(col("id"), col("n_sh"), xxhash64(col("s")).as("h"))
+    val freq = tok.groupBy("h").agg(count(lit(1)).as("df"))
+    val sortedSh = tok
+      .join(freq.hint("shuffle_hash"), "h")
+      .groupBy("id", "n_sh")
+      .agg(array_sort(collect_list(struct(col("df"), col("h")))).as("rs"))
+      .select(col("id"), col("n_sh"),
+        transform(col("rs"), r => r.getField("h")).as("sh_sorted"))
+    (tok, sortedSh)
+  }
+
+  /** PPJoin prefix length |s| − ⌈θ|s|⌉ + 1 over the `n_sh` column: any
+    * overlap ≥ ⌈θ|s|⌉ must hit one of a doc's first this-many classes. */
+  private def prefixLen(threshold: Double): Column =
+    (col("n_sh") - ceil(col("n_sh") * threshold) + 1).cast("int")
+
   /** EXACT set-similarity self-join: all pairs (i < j) with shingle-set
     * jaccard ≥ threshold, rounded to 6 decimals in the output.
     *
@@ -81,58 +129,21 @@ object Dedup {
     * prefix; verification recomputes exact jaccard from the full sets via
     * array intersection. Equivalent to the quadratic all-pairs join (the
     * DuckDB oracle runs that form) but with posting lists bounded by the
-    * rare-shingle prefix. */
-  /** @param materializeShingles the shingle projection feeds FOUR plan
-    *   branches (frequency table, prefix sort, both verify sides); `true`
-    *   (default) pins it once via lazy localCheckpoint — saves 4× recompute
-    *   and gives AQE exact sizes. At true 100 TB corpus scale the pinned
-    *   blocks are corpus-sized executor storage (spilling to disk) — pass
-    *   `false` there to trade recompute for zero pinned state, or persist a
-    *   durable shingle table yourself. Blocks are released by the context
-    *   cleaner once the result's RDD is collected/GC'd (no unbounded leak —
-    *   the round-1 advice against library-side cache() was about unreleased
-    *   eager caches; a lazy checkpoint scoped to the query lifetime is the
-    *   deliberate tradeoff here). */
+    * rare-shingle prefix.
+    *
+    * The shingle projection feeds FOUR plan branches (frequency table,
+    * prefix sort, both verify sides), so it is pinned once via lazy
+    * localCheckpoint — saves 4× recompute and gives AQE exact sizes. At
+    * true 100 TB corpus scale the pinned blocks are corpus-sized executor
+    * storage (spilling to disk). Blocks are released by the context cleaner
+    * once the result's RDD is collected/GC'd (no unbounded leak — the
+    * round-1 advice against library-side cache() was about unreleased eager
+    * caches; a lazy checkpoint scoped to the query lifetime is the
+    * deliberate tradeoff here). */
   def exactJaccardJoin(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int = 3, threshold: Double = 0.8,
-                       materializeShingles: Boolean = true): DataFrame = {
-    val ds0 = docShingles(docs, idCol, textCol, n)
-    val ds = if (materializeShingles) ds0.localCheckpoint(eager = false) else ds0
-
-    // Global shingle rarity: document frequency per shingle. The prefix
-    // order only needs to be a TOTAL ORDER consistent across docs, so the
-    // (df, shingle) tuple itself is the sort key — no global row_number
-    // window (a single-partition sort at scale); array_sort on the collected
-    // structs orders lexicographically by (df, h) per doc, fully distributed.
-    //
-    // Candidate generation runs on h = xxhash64(s) — 8-byte longs where the
-    // string shingle used to cross every exchange and drive every
-    // sort/join/aggregate comparison (guide §2.3, narrower types; the
-    // weightedJaccardJoin change, applied to the set form). Recall stays
-    // exactly 1.0: the PPJoin pigeonhole needs only SOME fixed total order;
-    // a collision merges two shingles into one class, which only ADDS
-    // common keys between docs while SHORTENING a doc's class list against
-    // its true-|sh|-derived prefix length — the smallest common key still
-    // lands inside both prefixes. Verification recomputes exact jaccard
-    // from the true string arrays, so the output is unchanged.
-    val tok = ds.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
-      .select(col("id"), col("n_sh"), xxhash64(col("s")).as("h"))
-    val freq = tok.groupBy("h").agg(count(lit(1)).as("df"))
-
-    // Re-sort each doc's shingle classes rarest-first, keep the prefix.
-    // Every join below is pinned to SHUFFLE_HASH: the joined sides (class
-    // frequency table, prefix inverted index, full shingle-set projections)
-    // are all CORPUS-SIZED, so broadcasting them is wrong at scale — and
-    // locally the size estimator undercounts the array-of-string rows badly
-    // enough to broadcast hundreds of MB, fragmenting the heap (measured
-    // 7 s → 187 s run-to-run degradation from humongous-allocation churn).
-    val prefixLen = (col("n_sh") - ceil(col("n_sh") * threshold) + 1).cast("int")
-    val sortedSh = tok
-      .join(freq.hint("shuffle_hash"), "h")
-      .groupBy("id", "n_sh")
-      .agg(array_sort(collect_list(struct(col("df"), col("h")))).as("rs"))
-      .select(col("id"), col("n_sh"),
-        transform(col("rs"), r => r.getField("h")).as("sh_sorted"))
+                       n: Int = 3, threshold: Double = 0.8): DataFrame = {
+    val ds = docShingles(docs, idCol, textCol, n).localCheckpoint(eager = false)
+    val (_, sortedSh) = rarestFirstClasses(ds)
     // NOTE: the self-join below references prefixes twice and re-executes
     // the freq-join subtree per side. Measured at sf0.1, checkpointing here
     // is a net LOSS (accumulated checkpoint blocks trigger GC churn that
@@ -140,7 +151,8 @@ object Dedup {
     // projection is worth pinning. Revisit if candidate generation ever
     // dominates at larger corpora.
     val prefixes = sortedSh
-      .select(col("id"), explode(slice(col("sh_sorted"), lit(1), prefixLen)).as("h"))
+      .select(col("id"), explode(slice(col("sh_sorted"), lit(1),
+        prefixLen(threshold))).as("h"))
 
     // Inverted index over prefixes → candidate pairs.
     val a = prefixes.as("a"); val b = prefixes.hint("shuffle_hash").as("b")
@@ -189,30 +201,13 @@ object Dedup {
     * SHUFFLE_HASH pins as the jaccard join (every side corpus-sized), same
     * (df, shingle) distributed total order, no global window. */
   def containmentJoin(docs: DataFrame, idCol: String, textCol: String,
-                      n: Int = 3, threshold: Double = 0.8,
-                      materializeShingles: Boolean = true): DataFrame = {
+                      n: Int = 3, threshold: Double = 0.8): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
-    val ds0 = docShingles(docs, idCol, textCol, n)
-    val ds = if (materializeShingles) ds0.localCheckpoint(eager = false) else ds0
-
-    // Hashed candidate classes, exactly as in [[exactJaccardJoin]]: the
-    // one-sided pigeonhole (any |A| − ⌈θ|A|⌉ + 1 of A's elements must hit
-    // B) holds for ANY fixed total order, and collisions only add common
-    // keys while shortening class lists against the true-size prefix
-    // length — recall stays 1.0; verification is exact on the true sets.
-    val tok = ds.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
-      .select(col("id"), col("n_sh"), xxhash64(col("s")).as("h"))
-    val freq = tok.groupBy("h").agg(count(lit(1)).as("df"))
-    val prefixLen = (col("n_sh") - ceil(col("n_sh") * threshold) + 1).cast("int")
-    val sortedSh = tok
-      .join(freq.hint("shuffle_hash"), "h")
-      .groupBy("id", "n_sh")
-      .agg(array_sort(collect_list(struct(col("df"), col("h")))).as("rs"))
-      .select(col("id"), col("n_sh"),
-        transform(col("rs"), r => r.getField("h")).as("sh_sorted"))
+    val ds = docShingles(docs, idCol, textCol, n).localCheckpoint(eager = false)
+    val (tok, sortedSh) = rarestFirstClasses(ds)
     val prefixes = sortedSh
       .select(col("id"), col("n_sh"),
-        explode(slice(col("sh_sorted"), lit(1), prefixLen)).as("h"))
+        explode(slice(col("sh_sorted"), lit(1), prefixLen(threshold))).as("h"))
 
     // One-sided inverted index: contained-side prefixes probe the FULL
     // container-side posting lists. Size prune inside the join condition:
@@ -267,13 +262,14 @@ object Dedup {
     * SHUFFLE_HASH pins as [[exactJaccardJoin]] (every joined side is
     * corpus-sized; compile-time size estimates undercount array rows). */
   def weightedJaccardJoin(docs: DataFrame, idCol: String, textCol: String,
-                          n: Int = 3, threshold: Double = 0.8,
-                          materializeBags: Boolean = true): DataFrame = {
-    val tf0 = docs
+                          n: Int = 3, threshold: Double = 0.8): DataFrame = {
+    // the bags feed the prefix windows and both verify sides: pinned once,
+    // the exactJaccardJoin shingle-projection tradeoff
+    val tf = docs
       .select(col(idCol).as("id"),
         explode(shingleBag(col(textCol), n)).as("t"))
       .groupBy("id", "t").agg(count(lit(1)).as("tf"))
-    val tf = if (materializeBags) tf0.localCheckpoint(eager = false) else tf0
+      .localCheckpoint(eager = false)
     // Candidate generation runs entirely on h = xxhash64(t) — 8-byte longs
     // where the string shingle (~20-40 B) used to cross every exchange and
     // drive every sort/join comparison (guide §2.3, narrower types). The
@@ -301,14 +297,12 @@ object Dedup {
     // The prefix table feeds BOTH sides of the candidate self-join; without
     // a pin the whole window subtree executes twice (measured in the r17
     // before-plan: two identical 18-node branches). It is prefix-sized
-    // (≲ corpus tokens × θ-complement), far smaller than the bags the
-    // same flag already pins.
-    val prefixes0 = ordered
+    // (≲ corpus tokens × θ-complement), far smaller than the bags pinned
+    // above.
+    val prefixes = ordered
       .where(col("suffix_w") >= lit(threshold) * col("w"))
       .select(col("id"), col("h"))
-    val prefixes =
-      if (materializeBags) prefixes0.localCheckpoint(eager = false)
-      else prefixes0
+      .localCheckpoint(eager = false)
     val a = prefixes.as("a"); val b = prefixes.hint("shuffle_hash").as("b")
     val candidates = a
       .join(b, col("a.h") === col("b.h") && col("a.id") < col("b.id"))
@@ -581,12 +575,11 @@ object Dedup {
     * aggregation-boundary layout as the MinHash signature agg, for the same
     * reason (projection collapse cannot re-inline the per-token hashing).
     * Output: (idCol, sh: long). */
-  /** @param materialize pin the (tiny: one long per doc) signature output
-    *   with a lazy localCheckpoint — the banded hamming join downstream
-    *   references it twice, and the vote aggregation re-executes per side
-    *   otherwise. */
+  /** The (tiny: one long per doc) signature output is pinned with a lazy
+    * localCheckpoint — the banded hamming join downstream references it
+    * twice, and the vote aggregation re-executes per side otherwise. */
   def simHashMd5Signatures(docs: DataFrame, idCol: String, textCol: String,
-                           bits: Int = 48, materialize: Boolean = true): DataFrame = {
+                           bits: Int = 48): DataFrame = {
     require(bits > 0 && bits <= 48, "md5Hash48 carries 48 hash bits")
     val toks = docs
       .select(col(idCol).as("id"), explode(TextOps.tokens(col(textCol))).as("t"))
@@ -603,7 +596,7 @@ object Dedup {
     // them with the all-ties signature 0, as the native expression yields
     val out = docs.select(col(idCol).as("id")).join(sigs, Seq("id"), "left")
       .select(col("id").as(idCol), coalesce(col("sh"), lit(0L)).as("sh"))
-    if (materialize) out.localCheckpoint(eager = false) else out
+    out.localCheckpoint(eager = false)
   }
 
   /** Connected components over an undirected pair list via min-label
@@ -1049,23 +1042,21 @@ object Dedup {
   def minHashLsh(docs: DataFrame, idCol: String, textCol: String,
                  n: Int = 3, threshold: Double = 0.8,
                  k: Int = 64, bands: Int = 16, seed: Long = 42L,
-                 materializeShingles: Boolean = true,
                  tokenHash: Column => Column = c => xxhash64(c),
                  hotBucketCap: Int = DefaultHotBucketCap): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
     val r = k / bands
-    val ds0 = docShingles(docs, idCol, textCol, n)
     // shingles feed the signature agg + both verify sides — same
     // materialization tradeoff as exactJaccardJoin
-    val ds = if (materializeShingles) ds0.localCheckpoint(eager = false) else ds0
+    val ds = docShingles(docs, idCol, textCol, n).localCheckpoint(eager = false)
     // The banded self-join references signatures on BOTH sides, and each
     // side would re-execute the full signature aggregation (explode + k
     // permutations per shingle — expensive with the md5 token hash). The
     // signature table is only n_docs × k longs, so pinning it is near-free
     // (unlike the banded/exploded form, whose checkpoint measured as a
     // round-2 loss).
-    val sigs0 = minHashSignatureAgg(ds, k, seed, tokenHash)
-    val sigs = if (materializeShingles) sigs0.localCheckpoint(eager = false) else sigs0
+    val sigs = minHashSignatureAgg(ds, k, seed, tokenHash)
+      .localCheckpoint(eager = false)
 
     // hot-bucket guard: an LSH bucket only exceeds the cap when >cap docs
     // share a full band of minhashes — mass-duplicated degenerate content

@@ -104,9 +104,7 @@ class Round15PlansSpec extends AnyFunSuite {
     def norm(u: String): String = new java.net.URI(u).getPath
     val df = SparkEntry.queries("stream_snapshot_commits")(spark, dir)
     df.collect()
-    val t = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_snapstream_${ProcessHandle.current().pid()}_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")).getPath + "/table"
+    val t = graft.queries.Artifacts.path("snapstream", dir) + "/table"
     assert(new java.io.File(s"$t/data/c=99999").isDirectory &&
       new java.io.File(s"$t/manifests/snap=99998").isDirectory,
       "the adversarial plants must exist for this pin to mean anything")

@@ -12,17 +12,24 @@ class StorageSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val dir = "/root/testdata/sf0.001"
 
+  private def cleanup(dir: String): Unit = {
+    import scala.reflect.io.Directory
+    new Directory(new java.io.File(dir)).deleteRecursively()
+  }
+
   test("partitioned parquet write → partition-pruned read") {
     val out = Files.createTempDirectory("graft_part").toString
-    val events = graft.engine.Sources.events(spark, dir)
-    events.write.mode("overwrite").partitionBy("event_type").parquet(out)
+    try {
+      val events = graft.engine.Sources.events(spark, dir)
+      events.write.mode("overwrite").partitionBy("event_type").parquet(out)
 
-    val one = spark.read.parquet(out).where(col("event_type") === "click")
-    val plan = one.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(event_type"),
-      s"expected partition pruning in:\n$plan")
-    val expected = events.where(col("event_type") === "click").count()
-    assert(one.count() == expected && expected > 0)
+      val one = spark.read.parquet(out).where(col("event_type") === "click")
+      val plan = one.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [isnotnull(event_type"),
+        s"expected partition pruning in:\n$plan")
+      val expected = events.where(col("event_type") === "click").count()
+      assert(one.count() == expected && expected > 0)
+    } finally cleanup(out)
   }
 
   test("bucketed tables: co-bucketed join plans without a shuffle exchange") {
@@ -58,12 +65,14 @@ class StorageSpec extends AnyFunSuite {
     val expected = base.orderBy("p_partkey").collect().toSeq
     for (fmt <- Seq("orc", "json", "csv")) {
       val out = Files.createTempDirectory(s"graft_$fmt").toString
-      base.write.mode("overwrite").format(fmt)
-        .option("header", "true").save(out)
-      val back = spark.read.format(fmt)
-        .option("header", "true").schema(base.schema).load(out)
-      assert(back.orderBy("p_partkey").collect().toSeq == expected,
-        s"$fmt round-trip diverged")
+      try {
+        base.write.mode("overwrite").format(fmt)
+          .option("header", "true").save(out)
+        val back = spark.read.format(fmt)
+          .option("header", "true").schema(base.schema).load(out)
+        assert(back.orderBy("p_partkey").collect().toSeq == expected,
+          s"$fmt round-trip diverged")
+      } finally cleanup(out)
     }
   }
 

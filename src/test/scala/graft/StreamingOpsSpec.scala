@@ -14,6 +14,11 @@ import graft.streaming.StreamingOps
 class StreamingOpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
+  private def cleanup(dirs: String*): Unit = {
+    import scala.reflect.io.Directory
+    dirs.foreach(d => new Directory(new java.io.File(d)).deleteRecursively())
+  }
+
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 ${10 + minute / 60}%02d:${minute % 60}%02d:00")
 
@@ -185,15 +190,17 @@ class StreamingOpsSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    mem.addData(rows: _*)
-    val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val q = StreamingOps.toParquetBatches(df, out, ckpt)
-    q.processAllAvailable()
-    q.stop()
-    val landed = spark.read.parquet(out)
-    assert(landed.count() == rows.size)
-    assert(landed.columns.contains("__batch_id"))
+    try {
+      val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
+      mem.addData(rows: _*)
+      val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
+      val q = StreamingOps.toParquetBatches(df, out, ckpt)
+      q.processAllAvailable()
+      q.stop()
+      val landed = spark.read.parquet(out)
+      assert(landed.count() == rows.size)
+      assert(landed.columns.contains("__batch_id"))
+    } finally cleanup(out, ckpt)
   }
 
   test("toParquetBatches replay: re-writing the same batch id does not duplicate rows") {
@@ -201,23 +208,25 @@ class StreamingOpsSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     val out = java.nio.file.Files.createTempDirectory("graft_sink_replay").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_replay").toString
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    mem.addData(rows: _*)
-    val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val q = StreamingOps.toParquetBatches(df, out, ckpt)
-    q.processAllAvailable()
-    q.stop()
-    val once = spark.read.parquet(out)
-    val n = once.count()
-    // partition-dir column comes back type-inferred (int), not long
-    val lastBatch = once.agg(org.apache.spark.sql.functions.max("__batch_id"))
-      .collect()(0).get(0).asInstanceOf[Number].longValue
-    // simulate a post-crash replay of the final batch: same rows, same id
-    val replayRows = once.where(org.apache.spark.sql.functions.col("__batch_id") === lastBatch)
-      .drop("__batch_id")
-    StreamingOps.writeBatch(replayRows, lastBatch, out)
-    assert(spark.read.parquet(out).count() == n,
-      "a replayed batch must overwrite its own partition, not append a second copy")
+    try {
+      val mem = MemoryStream[(Long, Timestamp, Long, String, Double)]
+      mem.addData(rows: _*)
+      val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
+      val q = StreamingOps.toParquetBatches(df, out, ckpt)
+      q.processAllAvailable()
+      q.stop()
+      val once = spark.read.parquet(out)
+      val n = once.count()
+      // partition-dir column comes back type-inferred (int), not long
+      val lastBatch = once.agg(org.apache.spark.sql.functions.max("__batch_id"))
+        .collect()(0).get(0).asInstanceOf[Number].longValue
+      // simulate a post-crash replay of the final batch: same rows, same id
+      val replayRows = once.where(org.apache.spark.sql.functions.col("__batch_id") === lastBatch)
+        .drop("__batch_id")
+      StreamingOps.writeBatch(replayRows, lastBatch, out)
+      assert(spark.read.parquet(out).count() == n,
+        "a replayed batch must overwrite its own partition, not append a second copy")
+    } finally cleanup(out, ckpt)
   }
 
   test("checkpoint resume: a restarted query processes only new files, exactly once") {
@@ -226,38 +235,42 @@ class StreamingOpsSpec extends AnyFunSuite {
     val in = java.nio.file.Files.createTempDirectory("graft_resume_in")
     val out = java.nio.file.Files.createTempDirectory("graft_resume_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_resume_ckpt").toString
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("value", DoubleType)))
+    try {
+      val schema = StructType(Seq(
+        StructField("event_id", LongType), StructField("value", DoubleType)))
 
-    // drop a single-file parquet batch into the watched dir under a stable name
-    def addFile(name: String, data: Seq[(Long, Double)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_resume_stage").toString
-      data.toDF("event_id", "value").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, in.resolve(name))
-    }
-    // run the file-source stream against the SAME checkpoint until drained
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(schema).parquet(in.toString)
-      val q = StreamingOps.toParquetBatches(stream, out, ckpt)
-      q.processAllAvailable()
-      q.stop()
-    }
+      // drop a single-file parquet batch into the watched dir under a stable name
+      def addFile(name: String, data: Seq[(Long, Double)]): Unit = {
+        val tmp = java.nio.file.Files.createTempDirectory("graft_resume_stage").toString
+        try {
+          data.toDF("event_id", "value").coalesce(1).write.mode("overwrite").parquet(tmp)
+          val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+          java.nio.file.Files.move(part.toPath, in.resolve(name))
+        } finally cleanup(tmp)
+      }
+      // run the file-source stream against the SAME checkpoint until drained
+      def runOnce(): Unit = {
+        val stream = spark.readStream.schema(schema).parquet(in.toString)
+        val q = StreamingOps.toParquetBatches(stream, out, ckpt)
+        q.processAllAvailable()
+        q.stop()
+      }
 
-    addFile("a.parquet", Seq((1L, 1.0), (2L, 2.0)))
-    runOnce() // processes file a
-    val afterA = spark.read.parquet(out)
-    assert(afterA.select("event_id").as[Long].collect().toSet == Set(1L, 2L))
-    val batchesA = afterA.select("__batch_id").distinct().count()
+      addFile("a.parquet", Seq((1L, 1.0), (2L, 2.0)))
+      runOnce() // processes file a
+      val afterA = spark.read.parquet(out)
+      assert(afterA.select("event_id").as[Long].collect().toSet == Set(1L, 2L))
+      val batchesA = afterA.select("__batch_id").distinct().count()
 
-    addFile("b.parquet", Seq((3L, 3.0)))
-    runOnce() // resumed from the checkpoint: must see ONLY file b
-    val afterB = spark.read.parquet(out)
-    assert(afterB.select("event_id").as[Long].collect().toSet == Set(1L, 2L, 3L),
-      "restart must process the new file and must NOT reprocess the old one")
-    assert(afterB.count() == 3, "exactly-once across restart: no duplicated rows")
-    assert(afterB.select("__batch_id").distinct().count() == batchesA + 1,
-      "the resumed run must land as a NEW batch id continuing the checkpointed sequence")
+      addFile("b.parquet", Seq((3L, 3.0)))
+      runOnce() // resumed from the checkpoint: must see ONLY file b
+      val afterB = spark.read.parquet(out)
+      assert(afterB.select("event_id").as[Long].collect().toSet == Set(1L, 2L, 3L),
+        "restart must process the new file and must NOT reprocess the old one")
+      assert(afterB.count() == 3, "exactly-once across restart: no duplicated rows")
+      assert(afterB.select("__batch_id").distinct().count() == batchesA + 1,
+        "the resumed run must land as a NEW batch id continuing the checkpointed sequence")
+    } finally cleanup(in.toString, out, ckpt)
   }
 
   test("file-source streaming: readStream over the real events.parquet ≡ batch") {
@@ -315,77 +328,73 @@ class StreamingOpsSpec extends AnyFunSuite {
     // rising ingest minute, corpus HEARTBEATS last) so maxFilesPerTrigger=1
     // yields real multi-batch execution with candidate windows closing
     // while later batches are still arriving.
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_bscreen_${ProcessHandle.current().pid()}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
-    }
-    if (base.exists()) rm(base)
-    val streamDir = new java.io.File(base, "stream"); streamDir.mkdirs()
-    val slices = Seq(
-      docs.where(col("doc_id") % 5 === 4 && col("doc_id") % 60 < 20),
-      docs.where(col("doc_id") % 5 === 4 && col("doc_id") % 60 >= 20 &&
-        col("doc_id") % 60 < 40),
-      docs.where(col("doc_id") % 5 === 4 && col("doc_id") % 60 >= 40),
-      corpus)
-    slices.zipWithIndex.foreach { case (df, i) =>
-      val stage = new java.io.File(base, s"stage$i")
-      df.coalesce(1).write.parquet(stage.getPath)
-      val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(streamDir, f"slice$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(1700000000000L + i * 60000L) // force source order
-    }
-    val schema = docs.schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
-    val q = StreamingOps.bandedNearDupScreen(
-        src.withColumn("ingest_ts",
-            when(col("doc_id") % 5 === 4,
-              timestamp_seconds(lit(1704067200L) + (col("doc_id") % 60) * 60))
-              .otherwise(timestamp_seconds(lit(1704067200L + 86400L))))
-          .withWatermark("ingest_ts", "10 minutes")
-          // filter on the WATERMARK COLUMN (⟺ arrivals): a doc_id
-          // predicate pushes below the EventTimeWatermark node and the
-          // heartbeats would never advance the watermark
-          .where(col("ingest_ts") < timestamp_seconds(lit(1704067200L + 86400L))),
-        corpus, "doc_id", "text", "ingest_ts", threshold = 0.8)
-      .writeStream.format("memory").queryName("s_banded_screen")
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(180000)
-    val got = spark.table("s_banded_screen").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val base = java.nio.file.Files.createTempDirectory("graft_bscreen").toFile
+    try {
+      val streamDir = new java.io.File(base, "stream"); streamDir.mkdirs()
+      val slices = Seq(
+        docs.where(col("doc_id") % 5 === 4 && col("doc_id") % 60 < 20),
+        docs.where(col("doc_id") % 5 === 4 && col("doc_id") % 60 >= 20 &&
+          col("doc_id") % 60 < 40),
+        docs.where(col("doc_id") % 5 === 4 && col("doc_id") % 60 >= 40),
+        corpus)
+      slices.zipWithIndex.foreach { case (df, i) =>
+        val stage = new java.io.File(base, s"stage$i")
+        df.coalesce(1).write.parquet(stage.getPath)
+        val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
+        val dst = new java.io.File(streamDir, f"slice$i%02d.parquet")
+        java.nio.file.Files.move(part.toPath, dst.toPath)
+        dst.setLastModified(1700000000000L + i * 60000L) // force source order
+      }
+      val schema = docs.schema
+      val src = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(streamDir.getPath)
+      val q = StreamingOps.bandedNearDupScreen(
+          src.withColumn("ingest_ts",
+              when(col("doc_id") % 5 === 4,
+                timestamp_seconds(lit(1704067200L) + (col("doc_id") % 60) * 60))
+                .otherwise(timestamp_seconds(lit(1704067200L + 86400L))))
+            .withWatermark("ingest_ts", "10 minutes")
+            // filter on the WATERMARK COLUMN (⟺ arrivals): a doc_id
+            // predicate pushes below the EventTimeWatermark node and the
+            // heartbeats would never advance the watermark
+            .where(col("ingest_ts") < timestamp_seconds(lit(1704067200L + 86400L))),
+          corpus, "doc_id", "text", "ingest_ts", threshold = 0.8)
+        .writeStream.format("memory").queryName("s_banded_screen")
+        .outputMode(OutputMode.Append())
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination(180000)
+      val got = spark.table("s_banded_screen").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
-    // batch truth: the exact bipartite jaccard screen
-    val sh = docs.select(col("doc_id"), Dedup.shingles(col("text")).as("sh"))
-      .withColumn("n", size(col("sh"))).localCheckpoint()
-    val expected = sh.where(col("doc_id") % 5 === 4)
-      .select(col("doc_id").as("a_id"), col("sh").as("a_sh"), col("n").as("a_n"))
-      .crossJoin(sh.where(col("doc_id") % 5 =!= 4)
-        .select(col("doc_id").as("c_id"), col("sh").as("c_sh"), col("n").as("c_n")))
-      .withColumn("inter", size(array_intersect(col("a_sh"), col("c_sh"))))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("a_n") + col("c_n") - col("inter")).cast("double"), 6))
-      .where(col("jaccard") >= 0.8)
-      .select(col("a_id"), col("c_id"), col("jaccard"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got == expected,
-      s"streamed banded screen diverged: missing=${(expected -- got).take(5)} extra=${(got -- expected).take(5)}")
+      // batch truth: the exact bipartite jaccard screen
+      val sh = docs.select(col("doc_id"), Dedup.shingles(col("text")).as("sh"))
+        .withColumn("n", size(col("sh"))).localCheckpoint()
+      val expected = sh.where(col("doc_id") % 5 === 4)
+        .select(col("doc_id").as("a_id"), col("sh").as("a_sh"), col("n").as("a_n"))
+        .crossJoin(sh.where(col("doc_id") % 5 =!= 4)
+          .select(col("doc_id").as("c_id"), col("sh").as("c_sh"), col("n").as("c_n")))
+        .withColumn("inter", size(array_intersect(col("a_sh"), col("c_sh"))))
+        .withColumn("jaccard", round(col("inter").cast("double") /
+          (col("a_n") + col("c_n") - col("inter")).cast("double"), 6))
+        .where(col("jaccard") >= 0.8)
+        .select(col("a_id"), col("c_id"), col("jaccard"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(got == expected,
+        s"streamed banded screen diverged: missing=${(expected -- got).take(5)} extra=${(got -- expected).take(5)}")
 
-    // micro-batch slicing really happened (≥ 4 data batches)
-    val progresses = q.recentProgress
-    assert(progresses.count(_.numInputRows > 0) >= 4,
-      s"expected one batch per file: ${progresses.map(_.numInputRows).mkString(",")}")
-    // STATE BOUND: the heartbeat-advanced watermark closed every arrival
-    // window, so the aggregate's state store ends EMPTY — the refutation
-    // of the Complete-mode form's unbounded pair retention.
-    val finalState = progresses.reverse
-      .find(_.stateOperators.nonEmpty).get.stateOperators
-    assert(finalState.map(_.numRowsTotal).sum == 0,
-      s"end-of-stream aggregate state must be empty: " +
-        finalState.map(p => s"${p.operatorName}=${p.numRowsTotal}").mkString(","))
-    rm(base)
+      // micro-batch slicing really happened (≥ 4 data batches)
+      val progresses = q.recentProgress
+      assert(progresses.count(_.numInputRows > 0) >= 4,
+        s"expected one batch per file: ${progresses.map(_.numInputRows).mkString(",")}")
+      // STATE BOUND: the heartbeat-advanced watermark closed every arrival
+      // window, so the aggregate's state store ends EMPTY — the refutation
+      // of the Complete-mode form's unbounded pair retention.
+      val finalState = progresses.reverse
+        .find(_.stateOperators.nonEmpty).get.stateOperators
+      assert(finalState.map(_.numRowsTotal).sum == 0,
+        s"end-of-stream aggregate state must be empty: " +
+          finalState.map(p => s"${p.operatorName}=${p.numRowsTotal}").mkString(","))
+    } finally cleanup(base.getPath)
   }
 
   test("runningUserTotalsTws: transformWithState (RocksDB store) ≡ fMGWS semantics") {
